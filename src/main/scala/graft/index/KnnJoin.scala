@@ -101,7 +101,7 @@ object KnnJoin {
     * layout side — so batched serving covers the same recall knob the
     * rule's registration policy offers. Ball buckets are pairwise
     * distinct (b and b^(1<<p) never collide), so no dedupe is needed
-    * before the join; the (q_id, neighbor_id) dropDuplicates already
+    * before the join; the (q_id, neighbor_id) dedupe already
     * set-unions across tables AND ball positions.
     */
   def lshServeBatched(requests: DataFrame, layout: DataFrame,
@@ -124,16 +124,18 @@ object KnnJoin {
           .map(p => col("q_bkt").bitwiseXOR(lit(1 << p))): _*)))
     val q = balled
       .withColumn("q_part", pmod(col("q_bkt"), lit(numPhysicalPartitions)))
+    val cNorm = sqrt(DotProduct(col(embCol), col(embCol)))
     layout.join(broadcast(q),
         col("table") === col("q_t") && col("bucket_part") === col("q_part") &&
           col("bucket") === col("q_bkt") && col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col("q_emb"), col("q_norm"),
-        col(idCol).cast("long").as("neighbor_id"), col(embCol).as("c_emb"),
-        sqrt(DotProduct(col(embCol), col(embCol))).as("c_norm"))
-      .dropDuplicates("q_id", "neighbor_id") // set-union across tables
-      .withColumn("cos",
-        when(col("q_norm") === 0.0 || col("c_norm") === 0.0, 0.0)
-          .otherwise(DotProduct(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))))
+      .select(col("q_id"), col(idCol).cast("long").as("neighbor_id"),
+        when(col("q_norm") === 0.0 || cNorm === 0.0, 0.0)
+          .otherwise(DotProduct(col("q_emb"), col(embCol)) / (col("q_norm") * cNorm))
+          .as("cos"))
+      // set-union across tables: a neighbor's copies are byte-identical,
+      // so their cos is too and the dedupe groups three scalar columns
+      // (a hash aggregate) instead of carrying both vectors through it
+      .distinct()
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id"))))
       .where(col("rn") <= k)

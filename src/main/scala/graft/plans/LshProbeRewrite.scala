@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 /** Optimizer rule: rewrite exact top-k-by-cosine over a registered LSH
   * index table into the bucket-probe plan — the optimizer version of
@@ -65,7 +65,11 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
   final case class Registration(lsh: RandomHyperplaneLsh, dim: Int,
                                 numPhysicalPartitions: Int, maxHamming: Int = 0,
                                 guaranteeK: Boolean = false)
-    extends IndexRegistration
+    extends IndexRegistration {
+    /** The hyperplanes, drawn once per registration: every probe hashes
+      * its query against them. */
+    lazy val planes: Array[Array[Array[Float]]] = lsh.planes(dim)
+  }
 
   /** IVF policy: the trained centroid array (id → vector, the same
     * driver-side floats [[graft.index.IvfKnn]] broadcasts) and the
@@ -470,7 +474,7 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
   private def queryBuckets(reg: Registration, q: Array[Float]): Array[Int] = {
     val n = math.sqrt(q.map(x => x.toDouble * x.toDouble).sum)
     val qn = if (n == 0.0) q else q.map(x => (x / n).toFloat)
-    reg.lsh.planes(reg.dim).map(tp => reg.lsh.hash(qn.toSeq, tp))
+    reg.planes.map(tp => reg.lsh.hash(qn.toSeq, tp))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
@@ -701,10 +705,13 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
       F.bit_count(F.col("bucket").bitwiseXOR(qbCol)) <= 1
     val payload = payloadNames.map(F.col)
     // dedupe across sub-layouts = groupBy the payload — but Spark
-    // cannot GROUP BY un-orderable types (maps, e.g. a chunk layout's
-    // metadata column), so those columns ride the aggregate as
-    // `first()` instead: a row's sub-layout copies are byte-identical,
-    // so first() over a group of copies is exact, not a choice
+    // cannot GROUP BY un-orderable types. A map of orderable keys and
+    // values (e.g. a chunk layout's metadata column) is grouped as its
+    // entry array and rebuilt after; any other un-orderable column
+    // rides the aggregate as `first()`. A row's sub-layout copies are
+    // byte-identical, so both are exact, not a choice — and with only
+    // the int `min` in the aggregation buffer the dedupe plans as a
+    // code-generated hash aggregate, not a sort aggregate
     def orderableType(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.MapType => false
       case org.apache.spark.sql.types.ArrayType(et, _) => orderableType(et)
@@ -712,15 +719,26 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
         st.fields.forall(f => orderableType(f.dataType))
       case _ => true
     }
+    def entriesOrderable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+      case org.apache.spark.sql.types.MapType(kt, vt, _) => orderableType(kt) && orderableType(vt)
+      case _ => false
+    }
     val (groupNames, carryNames) =
       payloadNames.partition(n => orderableType(fl.schema(n).dataType))
     if (groupNames.isEmpty) return None
+    val (entryNames, firstNames) =
+      carryNames.partition(n => entriesOrderable(fl.schema(n).dataType))
     val cand = fl.where(member)
       .withColumn("gk_dist",
         F.when(F.col("bucket") === qbCol, F.lit(0)).otherwise(F.lit(1)))
-      .groupBy(groupNames.map(F.col): _*)
+      .select((groupNames ++ firstNames).map(F.col) ++
+        entryNames.map(n => F.map_entries(F.col(n)).as(n)) :+ F.col("gk_dist"): _*)
+      .groupBy((groupNames ++ entryNames).map(F.col): _*)
       .agg(F.min(F.col("gk_dist")).as("gk_min_dist"),
-        carryNames.map(n => F.first(F.col(n)).as(n)): _*)
+        firstNames.map(n => F.first(F.col(n)).as(n)): _*)
+      .select(payloadNames.map(n =>
+        if (entryNames.contains(n)) F.map_from_entries(F.col(n)).as(n) else F.col(n)) :+
+        F.col("gk_min_dist"): _*)
     ladderServe(kVal, sort, projectList, outerList, payload, cand,
       fl.where(F.col("table") === 0), ("lsh", "lsh_mp1", "brute"))
   } catch {
@@ -759,15 +777,24 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
     // literal type follows the partition column (read back as int when
     // every cluster id fits — matching literals keep the pruning
     // predicate cast-free, same rule as ivfProbeFilter)
+    def intIds(ids: Seq[Long]): Boolean =
+      ids.forall(v => v >= Int.MinValue && v <= Int.MaxValue) &&
+        fl.schema("cluster_id").dataType == IntegerType
     def inClusters(ids: Seq[Long]): org.apache.spark.sql.Column =
-      if (ids.forall(v => v >= Int.MinValue && v <= Int.MaxValue) &&
-          fl.schema("cluster_id").dataType == IntegerType)
-        F.col("cluster_id").isin(ids.map(v => Int.box(v.toInt)): _*)
+      if (intIds(ids)) F.col("cluster_id").isin(ids.map(v => Int.box(v.toInt)): _*)
       else F.col("cluster_id").isin(ids.map(Long.box): _*)
+    // the level tag is computed per row, so its probe list rides an
+    // array literal: codegen keeps that as a reference object and the
+    // generated projection is the same for every query (an IN-list of
+    // int literals would be inlined and compile per query; the wide
+    // list above only prunes partitions and is never generated)
+    val narrowList =
+      if (intIds(narrow)) F.typedlit(narrow.map(_.toInt).toSeq) else F.typedlit(narrow.toSeq)
     val payload = payloadNames.map(F.col)
     val cand = fl.where(inClusters(wide))
       .withColumn("gk_min_dist",
-        F.when(inClusters(narrow), F.lit(0)).otherwise(F.lit(1)))
+        F.when(F.array_contains(narrowList, F.col("cluster_id")), F.lit(0))
+          .otherwise(F.lit(1)))
       .select(payload :+ F.col("gk_min_dist"): _*)
     ladderServe(kVal, sort, projectList, outerList, payload, cand,
       fl, ("ivf", "ivf_w2", "brute"))
@@ -807,11 +834,11 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
     val bruteRung = bruteSrc.crossJoin(F.broadcast(lvl))
       .where(F.col("gk_level") === 2)
       .select(payload :+ F.col("gk_level"): _*)
+    // the level names ride an array literal (a codegen reference
+    // object), so both ladder kinds generate the same code for it
     val pool = chosen.unionByName(bruteRung)
-      .withColumn("index_used",
-        F.when(F.col("gk_level") === 0, F.lit(levels._1))
-          .when(F.col("gk_level") === 1, F.lit(levels._2))
-          .otherwise(F.lit(levels._3)))
+      .withColumn("index_used", F.element_at(
+        F.typedlit(Seq(levels._1, levels._2, levels._3)), F.col("gk_level") + 1))
     // re-entrant optimization of the composed subtree: the outer
     // optimizer batches have already run, so an un-optimized pool would
     // ship without partition pruning / pushdown; our own rule skips it
@@ -1390,21 +1417,31 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
         if (vs.size == 1) EqualTo(attr, Literal(vs.head, IntegerType))
         else In(attr, vs.map(Literal(_, IntegerType)))
       // Partition-col-only disjunction (prunable by Catalyst) AND the
-      // exact per-table bucket disjunction (row filtering). The first
-      // is implied by the second (bucket determines bucket_part), so
-      // the conjunction is exactly the per-table candidate union.
+      // per-row ball membership against the row's OWN table's query
+      // bucket. The first is implied by the second (bucket determines
+      // bucket_part), so the conjunction is exactly the per-table
+      // candidate union. The row filter reads the query buckets from an
+      // array literal: codegen keeps an array literal as a reference
+      // object, so the generated filter is the same for every query,
+      // where per-request int literals would be inlined into the Java
+      // source and compile new classes per query (the partition
+      // disjunction only prunes files and is never generated). Buckets
+      // are numPlanes-bit sign codes, so Hamming distance <= maxHamming
+      // is exactly membership in the probed ball.
       val pruneOr = qb.zipWithIndex.map { case (b, t) =>
         And(EqualTo(tableAttr, Literal(t, IntegerType)),
           inOrEq(partAttr,
             ball(b).map(math.floorMod(_, reg.numPhysicalPartitions)).distinct))
           .asInstanceOf[Expression]
       }.reduce(Or(_, _))
-      val exactOr = qb.zipWithIndex.map { case (b, t) =>
-        And(EqualTo(tableAttr, Literal(t, IntegerType)),
-          inOrEq(bucketAttr, ball(b).distinct))
-          .asInstanceOf[Expression]
-      }.reduce(Or(_, _))
-      And(pruneOr, exactOr)
+      val qbAt = ElementAt(
+        Literal.create(qb.toSeq, ArrayType(IntegerType, containsNull = false)),
+        Add(tableAttr, Literal(1)), failOnError = false)
+      val member =
+        if (reg.maxHamming <= 0) EqualTo(bucketAttr, qbAt)
+        else LessThanOrEqual(BitwiseCount(BitwiseXor(bucketAttr, qbAt)),
+          Literal(reg.maxHamming))
+      And(pruneOr, member)
     }
 
   /** The IVF probe filter: `cluster_id IN (top-nprobe centroids by

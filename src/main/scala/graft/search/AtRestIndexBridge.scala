@@ -2,8 +2,13 @@ package graft.search
 
 import graft.index.{IndexGenerations, LshIndexStore, RandomHyperplaneLsh}
 import graft.state.Engine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
 /** Bridges the reference's O12 search orchestrator onto the PRODUCTION
   * serving tier (r15 verdict, Next #5): until r16, `index = "lsh"`
@@ -27,18 +32,21 @@ import org.apache.spark.sql.functions._
   * r16 way: register(new) → unregister(old) → retire(old) through
   * [[IndexGenerations]], serving reads holding a lease so a re-register
   * mid-flight defers the old directory's deletion instead of racing it.
+  *
+  * At-rest-first dispatch: [[servingEntry]] answers whether this tier
+  * serves a request before anything is planned, and each entry records
+  * the corpus dim at registration, so [[SearchService]] needs no view
+  * of the engine's chunks to serve. The per-request plan contract:
+  * [[serve]] (one request) and [[tryServeBatch]] (a request set) each
+  * plan, check and collect ONE query, and every per-request value (the
+  * query vector, its LSH buckets, its IVF probe list) reaches that plan
+  * as an array literal or as a partition filter, never as an inlined
+  * scalar literal — so the generated code is the same for every request
+  * and comes from Spark's codegen cache once warm.
   */
 final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
                               numPhysicalPartitions: Int = 16) {
-
-  private final case class Entry(path: String, version: Int,
-                                 kind: String, // "lsh" | "ivf" | "hnsw"
-                                 layout: DataFrame,
-                                 // hnsw only: the chunk payload view at
-                                 // the registered version (the graph
-                                 // layout stores hashed node ids +
-                                 // vectors, not the chunk columns)
-                                 payload: Option[DataFrame] = None)
+  import AtRestIndexBridge.Entry
 
   private val entries =
     new java.util.concurrent.ConcurrentHashMap[String, Entry]
@@ -66,9 +74,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     val existing = Option(entries.get(libraryId))
     if (existing.exists(e => e.version == version && e.kind == "lsh"))
       return existing.get.path
-    val corpus = libraryCorpus(spark, engine, libraryId)
-    val dim = corpus.select(col("embedding")).limit(1).collect()(0)
-      .getSeq[Float](0).length
+    val (corpus, dim) = libraryCorpus(spark, engine, libraryId)
     val path = s"$baseDir/$libraryId/v$version"
     // scale-adaptive physical partitioning with the constructor value
     // as the cap (r18, same rule as the gate layouts): a fixed 16-way
@@ -90,7 +96,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     graft.plans.LshProbeRewrite.register(path, lsh, dim, parts,
       guaranteeK = true)
     swapIn(spark, libraryId,
-      Entry(path, version, "lsh", spark.read.parquet(path)), existing)
+      Entry(path, version, "lsh", dim, spark.read.parquet(path)), existing)
   }
 
   /** The IVF twin of [[register]] (r16) — the decision table's
@@ -108,7 +114,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     val existing = Option(entries.get(libraryId))
     if (existing.exists(e => e.version == version && e.kind == "ivf"))
       return existing.get.path
-    val corpus = libraryCorpus(spark, engine, libraryId)
+    val (corpus, dim) = libraryCorpus(spark, engine, libraryId)
     val cents = graft.index.IvfKnn.centroids(corpus,
       org.apache.spark.sql.functions.xxhash64(col("id")), col("embedding"), stride)
     require(cents.nonEmpty,
@@ -118,7 +124,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
       corpus.withColumn("hid", xxhash64(col("id"))), "embedding", path): Unit
     graft.plans.LshProbeRewrite.registerIvf(path, cents, nprobe, guaranteeK = true)
     swapIn(spark, libraryId,
-      Entry(path, version, "ivf", spark.read.parquet(path)), existing)
+      Entry(path, version, "ivf", dim, spark.read.parquet(path)), existing)
   }
 
   /** The HNSW twin of [[register]] (r17, r16 verdict #4): the
@@ -141,23 +147,25 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     val existing = Option(entries.get(libraryId))
     if (existing.exists(e => e.version == version && e.kind == "hnsw"))
       return existing.get.path
-    val corpus = libraryCorpus(spark, engine, libraryId)
+    val (corpus, dim) = libraryCorpus(spark, engine, libraryId)
     val path = s"$baseDir/$libraryId/hnsw-v$version"
     graft.index.HnswIndexStore(m, efConstruction).write(
       corpus.withColumn("hid", xxhash64(col("id"))),
       "hid", "embedding", path, numShards)
     swapIn(spark, libraryId,
-      Entry(path, version, "hnsw", spark.read.parquet(path),
+      Entry(path, version, "hnsw", dim, spark.read.parquet(path),
         payload = Some(corpus)), existing)
   }
 
+  /** The library's embedded chunks and their dim, read off the first
+    * row — one probe job, which also refuses an empty library. */
   private def libraryCorpus(spark: SparkSession, engine: Engine,
-                            libraryId: String): DataFrame = {
+                            libraryId: String): (DataFrame, Int) = {
     val corpus = engine.chunksDF(spark)
       .where(col("library_id") === libraryId && col("embedding").isNotNull)
-    require(corpus.select(col("embedding")).limit(1).collect().nonEmpty,
-      s"library $libraryId has no embedded chunks to index")
-    corpus
+    val first = corpus.select(col("embedding")).limit(1).collect()
+    require(first.nonEmpty, s"library $libraryId has no embedded chunks to index")
+    (corpus, first(0).getSeq[Float](0).length)
   }
 
   /** Publish the new generation and retire the replaced one
@@ -226,7 +234,8 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * the engine's CURRENT version (the version-pinned staleness
     * contract is unchanged — a pointer at any other version is
     * ignored). HNSW entries are not adoptable (their chunk-payload
-    * view needs engine state at registration time); they re-register. */
+    * view needs engine state at registration time); they re-register.
+    * The corpus dim comes from the layout's `_registration` sidecar. */
   private def adoptCurrent(spark: SparkSession, libraryId: String,
                            version: Int): Option[Entry] =
     try {
@@ -239,10 +248,16 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
       if (!new java.io.File(path).exists()) return None
       if (!graft.plans.LshProbeRewrite.isRegistered(path))
         graft.plans.LshProbeRewrite.registerFromSidecar(path): Unit
-      injectRule(spark)
-      val e = Entry(path, version, kind, spark.read.parquet(path))
-      entries.put(libraryId, e)
-      Some(e)
+      graft.plans.LshProbeRewrite.registrationOf(path).collect {
+        case r: graft.plans.LshProbeRewrite.Registration => r.dim
+        case r: graft.plans.LshProbeRewrite.IvfRegistration if r.cents.nonEmpty =>
+          r.cents.head._2.length
+      }.map { dim =>
+        injectRule(spark)
+        val e = Entry(path, version, kind, dim, spark.read.parquet(path))
+        entries.put(libraryId, e)
+        e
+      }
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The serving entry for `libraryId` at `version`: the session's own
@@ -261,30 +276,82 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
         spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
   }
 
-  /** Serve one O12 query from the registered layout if `libraryId` is
-    * registered AT `version` (else None — the caller falls back to the
-    * transient path). `pack` runs under the generation's read lease,
-    * so a concurrent re-register cannot delete the directory
-    * mid-collect; it receives the served frame (plain columns + a
-    * `score`, plus `index_used` when `laddered`) and whether the
-    * guaranteed-k ladder was in play (a metadata filter was present).
-    * The `require` keeps a silent non-rewrite loud: the registered
-    * tier exists to serve the probe, and an exact scan here would be
-    * correct rows through the wrong component. */
-  private[search] def tryServe[A](spark: SparkSession, libraryId: String,
-                                  version: Int, qvec: Array[Float], k: Int,
-                                  filters: Map[String, String])
-                                 (pack: (DataFrame, Boolean, String) => A): Option[A] =
-    liveEntry(spark, libraryId, version).flatMap { e =>
-      // the HNSW kind: no filtered form (see registerHnsw) — a
-      // filtered search falls back to the transient path by returning
-      // None here, exactly like a stale version does
-      if (e.kind == "hnsw" && filters.nonEmpty) None
-      else Some(serveEntry(spark, e, libraryId, qvec, k, filters)(pack))
+  /** The live entry that serves `libraryId` at `version` for a
+    * request with these `filters`, or None — the caller takes the
+    * transient path. None when the library is unregistered or
+    * registered at another version (stale), and for a FILTERED request
+    * over an HNSW registration (no filtered form, see registerHnsw),
+    * at either arity. */
+  private[search] def servingEntry(spark: SparkSession, libraryId: String,
+                                   version: Int,
+                                   filters: Map[String, String]): Option[Entry] =
+    liveEntry(spark, libraryId, version)
+      .filterNot(e => e.kind == "hnsw" && filters.nonEmpty)
+
+  /** Serve one O12 query from `e` under its generation lease, so a
+    * concurrent re-register cannot delete the directory mid-collect.
+    * `project` receives the served frame (plain columns + a `score`,
+    * plus `index_used` when `laddered`) and whether the guaranteed-k
+    * ladder is in play (a metadata filter is present), and returns the
+    * query to run: the caller's limit and projection are applied
+    * BEFORE the plan check, so the Dataset whose optimized plan the
+    * check reads is the one collected — one optimization and one query
+    * execution per request. The `require` keeps a silent non-rewrite
+    * loud: the registered tier exists to serve the probe, and an exact
+    * scan here would be correct rows through the wrong component.
+    * Returns the collected rows and `laddered`. */
+  private[search] def serve(spark: SparkSession, e: Entry, libraryId: String,
+                            qvec: Array[Float], k: Int,
+                            filters: Map[String, String])
+                           (project: (DataFrame, Boolean) => DataFrame)
+  : (Array[Row], Boolean) =
+    IndexGenerations.lease(e.path, holderOf(spark)) {
+      if (e.kind == "hnsw") {
+        // driver-orchestrated beam over the stored graphs (the store
+        // call IS the serving path for this kind — there is no rule
+        // rewrite to pin); hits join back to the chunk payload on the
+        // hashed id, k rows against a broadcast — never corpus-sized
+        val hits = graft.index.HnswIndexStore().searchNodes(e.layout, qvec, k)
+          .withColumnRenamed("id", "hid")
+        val out = e.payload.get
+          .join(broadcast(hits), xxhash64(col("id")) === col("hid"))
+          .drop("hid")
+          .orderBy(col("score").desc, col("id").asc)
+          .limit(k)
+        (project(out, false).collect(), false)
+      } else {
+        // serve the PAYLOAD, not the layout internals: hits never
+        // expose bucket/cluster machinery, and the ladder rewrite only
+        // binds plans whose projection is layout-oblivious (a deduped
+        // or unioned candidate has no single honest `bucket` value) —
+        // the probe rewrite still finds the layout columns on the scan
+        // BELOW this projection
+        val filtered = filters.foldLeft(
+          e.layout.drop("table", "bucket", "bucket_part", "cluster_id")) {
+          case (df, (key, value)) =>
+            df.where(col("metadata").getItem(key) === lit(value))
+        }
+        val laddered = filters.nonEmpty
+        val scored = filtered.withColumn("score",
+          graft.expressions.CosineSimilarity(col("embedding"), typedlit(qvec.toSeq)))
+        val out = (if (laddered) scored.withColumn("index_used", lit("auto"))
+                   else scored)
+          .orderBy(col("score").desc, col("id").asc)
+          .limit(k)
+        val served = project(out, laddered)
+        val plan = served.queryExecution.optimizedPlan.toString
+        require(
+          if (laddered) plan.contains("gk_level")
+          else plan.contains("LshProbeTopK"),
+          s"registered-tier serve for $libraryId did not go through the rule " +
+            s"(probe/ladder missing from the optimized plan):\n${plan.take(1800)}")
+        (served.collect(), laddered)
+      }
     }
 
-  /** The last batch serve's executed-plan string (diagnostic surface —
-    * the spec pins "one plan per batch" on it). */
+  /** The last batch serve's executed-plan string, read off the query
+    * that ran (diagnostic surface — the spec pins "one plan per batch"
+    * on it). */
   @volatile private[graft] var lastBatchPlan: Option[String] = None
 
   /** BATCHED O12 serving (r17 stretch — the end-to-end form of the
@@ -293,28 +360,30 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * rewrite gates. Request ids are batch ordinals; layout node
     * identity is `xxhash64(chunk id)` (string chunk ids vs the serves'
     * long-id contract — the [[registerHnsw]] convention applied to all
-    * three kinds). Serves UNFILTERED batches only: a filtered batch is
-    * the per-request ladder's business and falls back to the
-    * orchestrator loop. Returns the (q_id, rn, payload..., score) rows
-    * for every request plus the tier's `index_used` value — identical
-    * per-request envelope to [[tryServe]]'s. */
+    * three kinds). A metadata filter rides the batched guaranteed-k
+    * ladder (LSH/IVF; HNSW has no filtered form and returns None).
+    * Returns the collected (q_id, rn, library_id, document_id, id,
+    * text, metadata, score[, index_used]) rows of every request, in no
+    * particular order (`rn` is each request's rank), whether
+    * `index_used` is present, and the tier's kind — identical
+    * per-request envelope to [[serve]]'s. */
   private[search] def tryServeBatch(spark: SparkSession, libraryId: String,
                                     version: Int, qvecs: Array[Array[Float]],
                                     k: Int,
                                     filters: Map[String, String] = Map.empty)
-  : Option[(DataFrame, Boolean, String)] =
-    liveEntry(spark, libraryId, version)
-      // HNSW has no filtered form at either arity (see registerHnsw)
-      .filterNot(e => e.kind == "hnsw" && filters.nonEmpty)
-      .map { e =>
+  : Option[(Array[Row], Boolean, String)] =
+    servingEntry(spark, libraryId, version, filters).map { e =>
       injectRule(spark) // the serving session may not be the registering one
       IndexGenerations.lease(e.path, holderOf(spark)) {
-        import spark.implicits._
         val laddered = filters.nonEmpty
-        val reqs = qvecs.zipWithIndex
-          .map { case (v, i) => (i.toLong, v.toSeq) }.toSeq
-          .toDF("hid", "embedding")
-          .select(col("hid"), col("embedding").cast("array<float>"))
+        // the requests as a local relation of catalyst rows: no encoder
+        // or cast is generated for them
+        val reqs = org.apache.spark.sql.graft.SqlShims.ofRows(spark, LocalRelation(
+          Seq(AttributeReference("hid", LongType, nullable = false)(),
+            AttributeReference("embedding", ArrayType(FloatType))()),
+          qvecs.toSeq.zipWithIndex.map { case (v, i) =>
+            InternalRow(i.toLong, ArrayData.toArrayData(v))
+          }))
         val hits = e.kind match {
           case "hnsw" =>
             graft.index.HnswIndexStore().searchManyNodes(e.layout,
@@ -379,22 +448,24 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
               declared.queryExecution.optimizedPlan)
         }
         // payload join: hits are (batch ordinal, rank, hashed id, cos);
-        // k·batch rows broadcast against one corpus scan. LSH layouts
-        // carry one payload copy per sub-layout table — byte-identical,
-        // so the post-join (q_id, id) dedupe is exact
+        // k·batch rows broadcast against one scan that reads every
+        // corpus row once — an LSH layout stores one payload copy per
+        // sub-layout table, so only table 0 is read. No dedupe and no
+        // global sort: each hit matches exactly one payload row, and
+        // the caller orders each request by `rn`
         val payload = e.payload.getOrElse(
-            e.layout.drop("table", "bucket", "bucket_part", "cluster_id"))
+            (if (e.kind == "lsh") e.layout.where(col("table") === 0) else e.layout)
+              .drop("table", "bucket", "bucket_part", "cluster_id"))
           .withColumn("n_hid", xxhash64(col("id")))
         val usedCols =
           if (laddered && e.kind != "hnsw") Seq(col("index_used")) else Nil
         val out = payload.join(broadcast(hits), col("n_hid") === col("neighbor_id"))
-          .dropDuplicates("q_id", "id")
-          .select(Seq(col("q_id"), col("rn"), col("id"), col("document_id"),
-            col("library_id"), col("text"), col("metadata"),
+          .select(Seq(col("q_id"), col("rn"), col("library_id"), col("document_id"),
+            col("id"), col("text"), col("metadata"),
             col("cos").as("score")) ++ usedCols: _*)
-          .orderBy(col("q_id"), col("rn"))
+        val rows = out.collect()
         lastBatchPlan = Some(out.queryExecution.executedPlan.toString)
-        (out, laddered && e.kind != "hnsw", e.kind)
+        (rows, laddered && e.kind != "hnsw", e.kind)
       }
     }
 
@@ -403,53 +474,18 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * in ANOTHER JVM defers while this session still serves). */
   private def holderOf(spark: SparkSession): String =
     org.apache.spark.sql.graft.SqlShims.sessionUUID(spark)
+}
 
-  /** Serve one query from a live entry, under its generation lease. */
-  private def serveEntry[A](spark: SparkSession, e: Entry, libraryId: String,
-                            qvec: Array[Float], k: Int,
-                            filters: Map[String, String])
-                           (pack: (DataFrame, Boolean, String) => A): A =
-    if (e.kind == "hnsw")
-      IndexGenerations.lease(e.path, holderOf(spark)) {
-        // driver-orchestrated beam over the stored graphs (the store
-        // call IS the serving path for this kind — there is no rule
-        // rewrite to pin); hits join back to the chunk payload on the
-        // hashed id, k rows against a broadcast — never corpus-sized
-        val hits = graft.index.HnswIndexStore().searchNodes(e.layout, qvec, k)
-          .withColumnRenamed("id", "hid")
-        val out = e.payload.get
-          .join(broadcast(hits), xxhash64(col("id")) === col("hid"))
-          .drop("hid")
-          .orderBy(col("score").desc, col("id").asc)
-          .limit(k)
-        pack(out, false, e.kind)
-      }
-    else
-      IndexGenerations.lease(e.path, holderOf(spark)) {
-        // serve the PAYLOAD, not the layout internals: hits never
-        // expose bucket/cluster machinery, and the ladder rewrite only
-        // binds plans whose projection is layout-oblivious (a deduped
-        // or unioned candidate has no single honest `bucket` value) —
-        // the probe rewrite still finds the layout columns on the scan
-        // BELOW this projection
-        val filtered = filters.foldLeft(
-          e.layout.drop("table", "bucket", "bucket_part", "cluster_id")) {
-          case (df, (key, value)) =>
-            df.where(col("metadata").getItem(key) === lit(value))
-        }
-        val laddered = filters.nonEmpty
-        val scored = filtered.withColumn("score",
-          graft.expressions.CosineSimilarity(col("embedding"), typedlit(qvec.toSeq)))
-        val out = (if (laddered) scored.withColumn("index_used", lit("auto"))
-                   else scored)
-          .orderBy(col("score").desc, col("id").asc)
-          .limit(k)
-        val plan = out.queryExecution.optimizedPlan.toString
-        require(
-          if (laddered) plan.contains("gk_level")
-          else plan.contains("LshProbeTopK"),
-          s"registered-tier serve for $libraryId did not go through the rule " +
-            s"(probe/ladder missing from the optimized plan):\n${plan.take(1800)}")
-        pack(out, laddered, e.kind)
-      }
+object AtRestIndexBridge {
+  /** One live generation. `dim` is the corpus embedding dim recorded
+    * at registration: the query-vector derivation and the dim guard of
+    * an at-rest search read it here instead of probing the corpus. */
+  private[search] final case class Entry(
+      path: String, version: Int,
+      kind: String, // "lsh" | "ivf" | "hnsw"
+      dim: Int, layout: DataFrame,
+      // hnsw only: the chunk payload view at the registered version (the
+      // graph layout stores hashed node ids + vectors, not the chunk
+      // columns)
+      payload: Option[DataFrame] = None)
 }

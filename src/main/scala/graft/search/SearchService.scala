@@ -4,7 +4,7 @@ import graft.embed.Embedder
 import graft.functions.VectorFunctions
 import graft.index.{BruteForceKnn, RandomHyperplaneLsh}
 import graft.state.Engine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One search hit (reference result packing O13,
@@ -21,13 +21,26 @@ final case class SearchResult(hits: Seq[Hit], index: String,
 
 /** The search orchestrator (O12, search_service.py:83-156):
   * scan+flatten → metadata filter → query-vector derivation → index
-  * dispatch (brute | lsh with adaptive fallback) → pack.
+  * dispatch (at-rest tier | brute | lsh with adaptive fallback) → pack.
   *
-  * The DataFrame plan per query is: filtered scan (library + non-null
-  * embedding + metadata conjunction — all pushable predicates) → score
-  * → TakeOrderedAndProject(k). On a partitioned 100 TB chunk corpus the
-  * library filter prunes partitions and only k rows per partition reach
-  * the driver.
+  * Every search first answers the empty-after-filter check and the
+  * corpus dim from the engine snapshot's resident rows; only a spilled
+  * engine probes the first row of the filtered chunk view instead.
+  *
+  * At-rest first: an `index = "lsh"` search over a library registered
+  * on the [[AtRestIndexBridge]] at its current version never builds
+  * the engine's chunk view. It embeds and guards at the dim recorded
+  * at registration, and plans and runs exactly ONE query over the
+  * stored layout (the caller's limit and projection are composed onto
+  * the served frame before it is optimized), whose generated code is
+  * the same for every request.
+  *
+  * The transient plan (unregistered or stale-version libraries,
+  * `index = "brute"`) is: filtered scan of the chunk view (library +
+  * non-null embedding + metadata conjunction — all pushable
+  * predicates) → score → TakeOrderedAndProject(k). On a partitioned
+  * 100 TB chunk corpus the library filter prunes partitions and only k
+  * rows per partition reach the driver.
   */
 final class SearchService(spark: SparkSession, engine: Engine,
                           embedder: Option[Embedder] = None,
@@ -50,32 +63,20 @@ final class SearchService(spark: SparkSession, engine: Engine,
     // O1 scan+flatten: chunks of this library with a non-null embedding
     // (search_service.py:43-46), then O2 conjunctive exact-match
     // metadata filter (missing key never matches, search_service.py:75).
-    val base = engine.chunksDF(spark)
-      .where(col("library_id") === libraryId && col("embedding").isNotNull)
-    val filtered = filters.foldLeft(base) { case (df, (key, value)) =>
-      df.where(col("metadata").getItem(key) === lit(value))
+    // Built only when a path reads it: the at-rest tier never does.
+    lazy val filtered: DataFrame = {
+      val base = engine.chunksDF(spark)
+        .where(col("library_id") === libraryId && col("embedding").isNotNull)
+      filters.foldLeft(base) { case (df, (key, value)) =>
+        df.where(col("metadata").getItem(key) === lit(value))
+      }
     }
 
-    // One job doubles as the empty-after-filter check (search_service.py:105-106)
-    // and the corpus-dim probe the index guards need.
-    val firstEmbedding = filtered.select(col("embedding")).limit(1).collect()
-    if (firstEmbedding.isEmpty) return SearchResult(Nil, index, None, version)
-    val dim = firstEmbedding(0).getSeq[Float](0).length
-
-    // Query vector: given embedding, else embed text at the corpus dim
-    // (search_service.py:110-116 passes dim through), else error.
-    val qvec: Array[Float] = queryEmbedding.getOrElse {
-      val text = queryText.getOrElse(
-        throw new IllegalArgumentException("query_text or query_embedding required"))
-      embedder.getOrElse(
-        throw new IllegalArgumentException("no embedder configured")).embedAt(text, dim)
-    }
-
-    // Dim guard on BOTH index paths (brute_force.py:36-37). The reference's
-    // lsh path has no clean guard — a mismatched query just explodes inside
-    // NumPy — so erroring here matches its observable "errors on mismatch"
-    // behavior rather than silently scoring a common prefix.
-    BruteForceKnn.requireDim(qvec, dim)
+    // One lookup doubles as the empty-after-filter check
+    // (search_service.py:105-106) and the corpus-dim probe the index
+    // guards need.
+    val firstDim = firstEmbeddingDim(libraryId, filters, filtered)
+    if (firstDim.isEmpty) return SearchResult(Nil, index, None, version)
 
     // The PRODUCTION tier first (r16, r15 verdict #5): when this
     // library's corpus is registered as an at-rest layout AT the
@@ -85,30 +86,18 @@ final class SearchService(spark: SparkSession, engine: Engine,
     // unchanged, `index_used` distinguishing the tier. Any other
     // version (stale registration) falls through to the transient
     // paths below — the reference's own version-pinned staleness
-    // contract.
-    if (index == "lsh") {
-      val bridged = atRest.flatMap(
-        _.tryServe(spark, libraryId, version, qvec, k, filters) { (df, laddered, kind) =>
-          val cols = Seq(col("id"), col("document_id"), col("library_id"),
-            col("text"), col("metadata"), col("score")) ++
-            (if (laddered) Seq(col("index_used")) else Nil)
-          val rows = rerank(df).limit(k).select(cols: _*).collect()
-          val hits = rows.map(r => Hit(r.getString(0), r.getString(1),
-            r.getString(2), r.getString(3), r.getMap[String, String](4).toMap,
-            r.getDouble(5))).toSeq
-          // the ladder's served level (constant across one query's
-          // rows) reaches the envelope — the O10 reporting contract
-          // carried through the O12 surface
-          val used =
-            if (laddered)
-              rows.headOption.map(r => "at_rest_" + r.getString(6))
-                .getOrElse("at_rest_brute")
-            else s"${kind}_at_rest"
-          (hits, used)
-        })
-      bridged.foreach { case (hits, used) =>
-        return SearchResult(hits, index, Some(used), version)
-      }
+    // contract. The tier embeds and guards at the dim recorded at
+    // registration.
+    val live =
+      if (index == "lsh")
+        atRest.flatMap(b => b.servingEntry(spark, libraryId, version, filters).map(b -> _))
+      else None
+    val dim = live.fold(firstDim.get)(_._2.dim)
+    val qvec = queryVector(queryText, queryEmbedding, dim)
+    live match {
+      case Some((bridge, e)) =>
+        return searchAtRest(bridge, e, libraryId, version, qvec, k, index, filters)
+      case None =>
     }
 
     val (hitsDF, used) = index match {
@@ -138,17 +127,81 @@ final class SearchService(spark: SparkSession, engine: Engine,
     // O15 rerank hook: identity by default (query_workflow.py:248-259),
     // reserved for semantic reranking / metadata boosting; callers that
     // rerank must re-trim to k afterwards (interactive_workflow.py:346-349).
-    val hits = rerank(hitsDF)
-      .limit(k)
-      .select(col("id"), col("document_id"), col("library_id"), col("text"),
-        col("metadata"), col("score"))
-      .collect()
-      .map(r => Hit(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getMap[String, String](4).toMap, r.getDouble(5)))
-      .toSeq
+    val hits = rerank(hitsDF).limit(k).select(hitCols: _*).collect().map(hit(_)).toSeq
 
     SearchResult(hits, index, Some(used), version)
   }
+
+  /** The at-rest serve of [[search]]: ONE query over the registered
+    * layout, the caller's rerank, limit and projection composed onto
+    * the served frame before it is planned. */
+  private def searchAtRest(bridge: AtRestIndexBridge, e: AtRestIndexBridge.Entry,
+                           libraryId: String, version: Int, qvec: Array[Float],
+                           k: Int, index: String,
+                           filters: Map[String, String]): SearchResult = {
+    val (rows, laddered) = bridge.serve(spark, e, libraryId, qvec, k, filters) {
+      (df, laddered) =>
+        val cols = if (laddered) hitCols :+ col("index_used") else hitCols
+        rerank(df).limit(k).select(cols: _*)
+    }
+    // the ladder's served level (constant across one query's rows)
+    // reaches the envelope — the O10 reporting contract carried
+    // through the O12 surface
+    val used =
+      if (laddered)
+        rows.headOption.map(r => "at_rest_" + r.getString(6)).getOrElse("at_rest_brute")
+      else s"${e.kind}_at_rest"
+    SearchResult(rows.map(hit(_)).toSeq, index, Some(used), version)
+  }
+
+  /** The dim of the first embedded chunk of `libraryId` that passes
+    * the metadata filter, or None when no chunk passes. Resident rows
+    * answer from the engine snapshot, in the chunk view's own row
+    * order; only a spilled engine probes the first row of the view
+    * (archived rows live only there). */
+  private def firstEmbeddingDim(libraryId: String, filters: Map[String, String],
+                                view: => DataFrame): Option[Int] = {
+    val snapshot = engine.state
+    if (snapshot.spillSegments.nonEmpty)
+      view.select(col("embedding")).limit(1).collect().headOption
+        .map(_.getSeq[Float](0).length)
+    else snapshot.chunks.collectFirst {
+      case c if c.library_id == libraryId && c.embedding.isDefined &&
+        filters.forall { case (key, value) => c.metadata.get(key).contains(value) } =>
+        c.embedding.get.length
+    }
+  }
+
+  /** Query vector: given embedding, else embed text at the corpus dim
+    * (search_service.py:110-116 passes dim through), else error. Then
+    * the dim guard on every index path (brute_force.py:36-37). The
+    * reference's lsh path has no clean guard — a mismatched query just
+    * explodes inside NumPy — so erroring here matches its observable
+    * "errors on mismatch" behavior rather than silently scoring a
+    * common prefix. */
+  private def queryVector(queryText: Option[String],
+                          queryEmbedding: Option[Array[Float]],
+                          dim: Int): Array[Float] = {
+    val qvec = queryEmbedding.getOrElse {
+      val text = queryText.getOrElse(
+        throw new IllegalArgumentException("query_text or query_embedding required"))
+      embedder.getOrElse(
+        throw new IllegalArgumentException("no embedder configured")).embedAt(text, dim)
+    }
+    BruteForceKnn.requireDim(qvec, dim)
+    qvec
+  }
+
+  /** The hit columns in the chunk schema's own order, so the final
+    * projection of a served plan is a no-op the optimizer removes
+    * instead of one more generated stage. */
+  private val hitCols = Seq(col("library_id"), col("document_id"), col("id"),
+    col("text"), col("metadata"), col("score"))
+
+  /** The hit whose [[hitCols]] start at position `at` of `r`. */
+  private def hit(r: Row, at: Int = 0): Hit = Hit(r.getString(at + 2), r.getString(at + 1),
+    r.getString(at), r.getString(at + 3), r.getMap[String, String](at + 4).toMap,
+    r.getDouble(at + 5))
 
   /** BATCHED O12 search (r17 stretch): every request of the batch
     * answered by ONE plan when the library is registered at its
@@ -176,18 +229,12 @@ final class SearchService(spark: SparkSession, engine: Engine,
           queryEmbeddings.toArray, k, filters))
       else None
     batched match {
-      case Some((df, laddered, kind)) =>
-        val cols = Seq(col("q_id"), col("rn"), col("id"), col("document_id"),
-          col("library_id"), col("text"), col("metadata"), col("score")) ++
-          (if (laddered) Seq(col("index_used")) else Nil)
-        val rows = df.select(cols: _*).collect().groupBy(_.getLong(0))
+      case Some((rows, laddered, kind)) =>
+        val byRequest = rows.groupBy(_.getLong(0))
         queryEmbeddings.indices.map { i =>
-          val reqRows = rows.getOrElse(i.toLong, Array.empty)
+          val reqRows = byRequest.getOrElse(i.toLong, Array.empty)
             .sortBy(_.getInt(1)) // the serve's own per-request rank
-          val hits = reqRows
-            .map(r => Hit(r.getString(2), r.getString(3), r.getString(4),
-              r.getString(5), r.getMap[String, String](6).toMap, r.getDouble(7)))
-            .toSeq
+          val hits = reqRows.map(hit(_, at = 2)).toSeq
           // per-REQUEST envelope: under a filter each request reports
           // ITS served ladder level (the O10 contract at batch arity);
           // a request whose filtered pool is empty exhausted the

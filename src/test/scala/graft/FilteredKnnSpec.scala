@@ -28,11 +28,13 @@ class FilteredKnnSpec extends AnyFunSuite {
   private val rng = new scala.util.Random(5)
   private val qVec = Array.fill(dim)(rng.nextGaussian().toFloat)
   private val randVecs = Array.fill(3000)(Array.fill(dim)(rng.nextGaussian().toFloat))
+  // drawn once: the fixture classification hashes thousands of vectors
+  private val planes = lsh.planes(dim)
 
   private def minHamming(v: Array[Float]): Int = {
     val vn = graft.functions.VectorFunctions.l2NormalizeArr(v)
     val qn = graft.functions.VectorFunctions.l2NormalizeArr(qVec)
-    lsh.planes(dim).map { tp =>
+    planes.map { tp =>
       Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(qn.toSeq, tp))
     }.min
   }
@@ -111,7 +113,7 @@ class FilteredKnnSpec extends AnyFunSuite {
     def minHammingTo(v: Array[Float], w: Array[Float]): Int = {
       val vn = graft.functions.VectorFunctions.l2NormalizeArr(v)
       val wn = graft.functions.VectorFunctions.l2NormalizeArr(w)
-      lsh.planes(dim).map { tp =>
+      planes.map { tp =>
         Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(wn.toSeq, tp))
       }.min
     }
@@ -174,7 +176,7 @@ class FilteredKnnSpec extends AnyFunSuite {
     def minHammingTo(v: Array[Float]): Int = {
       val vn = graft.functions.VectorFunctions.l2NormalizeArr(v)
       val wn = graft.functions.VectorFunctions.l2NormalizeArr(w)
-      lsh.planes(dim).map { tp =>
+      planes.map { tp =>
         Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(wn.toSeq, tp))
       }.min
     }
